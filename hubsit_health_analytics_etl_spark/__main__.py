@@ -72,7 +72,8 @@ def main(argv: list[str] | None = None) -> int:
         csv_export=not args.no_csv,
     )
     if not args.quiet:
-        # the preprocessed fact IS the first pipeline output
+        # the report reads the written fact Parquet (the first pipeline
+        # output), not the CSV ingest lineage
         print(gerar_relatorio_completo(tables["base_tratada_completa"]))
     print(
         "\n[SUCESSO] Todas as tabelas agregadas foram geradas na pasta "

@@ -11,9 +11,12 @@ same column names. Differences, all deliberate:
 - Zero row-at-a-time Python: the status machine
   (``definir_status_final``, :265-277) and every per-group lambda
   (:478-480 etc.) are native ``when``/``sum(when)`` expressions.
-- Lazy single plan per output: pandas materializes after every
-  statement; here Catalyst fuses the whole lineage, prunes columns
-  against each aggregate, and pushes filters into the scan.
+- One ingest pass per run: pandas materializes after every statement;
+  here Catalyst fuses the CSV → preprocess lineage into one plan that
+  runs once, to write the fact's Parquet. The nine aggregates, both
+  export formats and the report all read Parquet, so Catalyst prunes
+  columns and pushes filters into that scan instead of re-parsing the
+  CSV per output.
 - Division by zero yields 0 (not pandas inf) in the capacity ratios
   (:674-676) — the reference's fillna(0) only masks NaN, not inf.
 - Outputs written Parquet-first; the ';'+decimal-comma CSV dialect
@@ -117,10 +120,11 @@ def preprocess(
         df = df.filter(doc.isNull() | ~F.upper(F.trim(doc)).isin(norm))
 
     # F5 — tolerant dayfirst datetime parse (:183-194)
-    if parse_dates:
-        for c in DATETIME_COLS:
-            if c in df.columns:
-                df = df.withColumn(c, parse_dayfirst_timestamp(F.col(c).cast("string")))
+    dates = [c for c in DATETIME_COLS if c in df.columns] if parse_dates else []
+    if dates:
+        df = df.withColumns(
+            {c: parse_dayfirst_timestamp(F.col(c).cast("string")) for c in dates}
+        )
 
     # null policy (:196-197)
     if "Pacientes_Sexo" in df.columns:
@@ -527,6 +531,15 @@ def gerar_tabelas(
     }
 
 
+def _write_and_reopen(df: DataFrame, path: str) -> DataFrame:
+    """Write ``df`` as Parquet and return a scan of what was written.
+    The schema is already known, so the re-open runs no inference job."""
+    from ..sources.sinks import write_parquet
+
+    write_parquet(df, path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+
+
 def run_pipeline(
     spark: SparkSession,
     base_path: str,
@@ -539,9 +552,16 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """End-to-end replacement for `python src/etl_pipeline.py base.csv
     precos.txt`: tolerant CSV ingest → preprocess → nine outputs →
-    Parquet (+ optional Power-BI CSV dialect)."""
+    Parquet (+ optional Power-BI CSV dialect).
+
+    The CSV → preprocess lineage runs once, to write
+    ``base_tratada_completa.parquet``. The nine aggregates are built
+    over a scan of that Parquet; each is written once as Parquet, and
+    its CSV export reads that Parquet back. The returned frames are
+    scans of the written Parquet, so the report and any other
+    downstream reader never re-run the ingest."""
     from ..sources.csv_tolerant import read_csv_tolerant, read_optional_csv
-    from ..sources.sinks import write_csv_pbi, write_parquet
+    from ..sources.sinks import write_csv_pbi
 
     base = read_csv_tolerant(spark, base_path)
     precos = read_csv_tolerant(
@@ -555,9 +575,12 @@ def run_pipeline(
         else None
     )
     fact = preprocess(base, precos, as_of=as_of, blacklist=blacklist, parse_dates=True)
-    tables = gerar_tabelas(fact, ocup)
-    for name, tdf in tables.items():
-        write_parquet(tdf, f"{output_dir}/{name}.parquet")
+    fact = _write_and_reopen(fact, f"{output_dir}/base_tratada_completa.parquet")
+    tables = {}
+    for name, tdf in gerar_tabelas(fact, ocup).items():
+        if tdf is not fact:
+            tdf = _write_and_reopen(tdf, f"{output_dir}/{name}.parquet")
+        tables[name] = tdf
         if csv_export:
             write_csv_pbi(tdf, f"{output_dir}/{name}.csv_dir")
     return tables

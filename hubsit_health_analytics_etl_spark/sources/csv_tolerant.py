@@ -156,12 +156,12 @@ def read_csv_tolerant(
     # normalize the reference's textual NA sentinels to null
     import pyspark.sql.functions as F
 
-    for c, t in df.dtypes:
-        if t == "string" and c != corrupt_col:
-            df = df.withColumn(
-                c, F.when(F.trim(F.col(c)).isin("", "NA", "N/A"), None).otherwise(F.col(c))
-            )
-    return df
+    na = {
+        c: F.when(F.trim(F.col(c)).isin("", "NA", "N/A"), None).otherwise(F.col(c))
+        for c, t in df.dtypes
+        if t == "string" and c != corrupt_col
+    }
+    return df.withColumns(na) if na else df
 
 
 def read_optional_csv(

@@ -184,6 +184,39 @@ def test_outputs_written_and_csv_dialect(outputs, spark):
     assert "100,00" in text or "100,0" in text  # decimal comma rendering
 
 
+def test_outputs_derive_from_written_parquet(outputs, spark):
+    """The ingest lineage runs once: every returned table scans the
+    Parquet written under out_dir (never the base CSV or the price
+    file), and each CSV export agrees with its Parquet."""
+    import glob
+    import os
+    from urllib.parse import urlparse
+
+    tables, out_dir, _ = outputs
+    root = os.path.realpath(out_dir) + os.sep
+    inputs = {
+        os.path.realpath(out_dir.parent / "base_anonima_final.csv"),
+        os.path.realpath(out_dir.parent / "TabelaConvenio.txt"),
+    }
+    for name, df in tables.items():
+        files = [os.path.realpath(urlparse(f).path) for f in df.inputFiles()]
+        assert files, name
+        assert all(f.startswith(root) for f in files), (name, files)
+        assert not inputs & set(files), name
+
+        n_parquet = spark.read.parquet(str(out_dir / f"{name}.parquet")).count()
+        n_csv = (
+            spark.read.option("sep", ";").option("header", True)
+            .csv(str(out_dir / f"{name}.csv_dir")).count()
+        )
+        assert n_csv == n_parquet, name
+
+    part = glob.glob(str(out_dir / "financeiro.csv_dir" / "part-*.csv"))[0]
+    with open(part, encoding="utf-8") as fh:
+        row = [ln for ln in fh if ln.startswith("U1;consulta  geral;")]
+    assert len(row) == 1 and "1234,56" in row[0].split(";")
+
+
 def test_review_regressions(spark):
     """Regression pins for review findings: null-doctor rows survive the
     blacklist; numeric price files are not decimal-munged; null schedule

@@ -58,3 +58,56 @@ def test_memo_cap_evicts_foreign_sessions_first(spark):
     finally:
         for k in [k for k in pq._PLAN_MEMO if k[0] == "dead-app"]:
             del pq._PLAN_MEMO[k]
+
+
+def test_memo_is_safe_under_concurrent_reads(spark):
+    """Threads reading distinct tables while the memo is over its cap
+    sweep it on every call, while another session keeps inserting. The
+    lock must keep each lookup, eviction and insert whole: no
+    'dictionary changed size during iteration', no double delete."""
+    import sys
+    import threading
+
+    from hubsit_health_analytics_etl_spark.sources import parquet as pq
+    from hubsit_health_analytics_etl_spark.sources.parquet import TABLES
+
+    errors: list[Exception] = []
+    done = threading.Event()
+    for i in range(pq._PLAN_MEMO_CAP + 1):
+        pq._PLAN_MEMO[("dead-app", f"/nope/{i}")] = (None, None)
+
+    def other_session() -> None:
+        # a second session's reads, inserting as fast as it can
+        i = 0
+        while not done.is_set():
+            with pq._PLAN_MEMO_LOCK:
+                for _ in range(64):
+                    pq._PLAN_MEMO[("other-app", f"/other/{i}")] = (None, None)
+                    i += 1
+
+    def read(name: str) -> None:
+        try:
+            for _ in range(20):
+                assert pq.read_parquet_immutable(spark, f"{SF_SMOKE}/{name}.parquet")
+        except Exception as e:  # asserted after the join
+            errors.append(e)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # hand the GIL over mid-sweep
+    filler = threading.Thread(target=other_session)
+    readers = [threading.Thread(target=read, args=(t,)) for t in TABLES]
+    try:
+        filler.start()
+        for t in readers:
+            t.start()
+        for t in readers:
+            t.join(timeout=120)
+    finally:
+        done.set()
+        filler.join(timeout=10)
+        sys.setswitchinterval(switch)
+        with pq._PLAN_MEMO_LOCK:
+            for k in [k for k in pq._PLAN_MEMO if k[0] in ("dead-app", "other-app")]:
+                del pq._PLAN_MEMO[k]
+    assert not any(t.is_alive() for t in [filler, *readers])
+    assert not errors, errors[:3]
