@@ -2,19 +2,19 @@
 
 Same methodology as bench.py (noop sink, PREPARES outside the timed
 loop, $SPARK_GRAFT_SF_DIR / $SPARK_GRAFT_CPUS) but additionally records
-per query: Spark job count, stage count, task count, and shuffle
-write/read bytes via a JVM SparkListener — the instrument that
-separates scheduling-latency-bound queries (many tiny jobs/stages)
-from genuinely compute/shuffle-bound ones (guide §1.1/§7.1, which we
-cannot do through the UI because spark.ui.enabled=false here).
+per query its Spark job, stage and task counts, read from the driver's
+``statusTracker`` by job group — enough to separate scheduling-latency-
+bound queries (many tiny jobs/stages) from compute-bound ones (guide
+§1.1/§7.1, which we cannot do through the UI because
+spark.ui.enabled=false here). It records no shuffle bytes or executor
+metrics; for those run ``perfbench/run.py --trace 1``.
 
 Usage:
     python bench_profile.py [--queries name1,name2] [--out path.json]
 
-Writes a JSON mapping name -> {sec, jobs, stages, tasks,
-shuffle_write_mb, shuffle_read_mb} to bench_evidence/profile_grid.json
-(or --out). Not part of the driver contract; bench.py remains the
-bench of record.
+Writes a JSON mapping name -> {sec, jobs, stages, tasks} to
+bench_evidence/profile_grid.json (or --out). Not part of the driver
+contract; bench.py remains the bench of record.
 """
 
 from __future__ import annotations

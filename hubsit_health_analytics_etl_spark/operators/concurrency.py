@@ -51,13 +51,11 @@ MAX_WAVE_POOL = 8
 
 def _inherit(fn: Callable[..., T]) -> Callable[..., T]:
     """Wrap ``fn`` so the child thread inherits the caller's JVM-local
-    properties AND session tags (the session form of
-    ``inheritable_thread_target``; the bare-callable form inherits
-    properties only and warns about tags on every call)."""
-    spark = SparkSession.getActiveSession()
-    if spark is not None:
-        return inheritable_thread_target(spark)(fn)
-    return inheritable_thread_target(fn)
+    properties AND session tags. ``SparkSession.active()`` rather than
+    ``getActiveSession()``: inside a wave thread the latter is ``None``,
+    the former falls back to the default session, so nested waves keep
+    their tags too."""
+    return inheritable_thread_target(SparkSession.active())(fn)
 
 
 def ckpt_wave(*dfs: DataFrame) -> tuple[DataFrame, ...]:

@@ -50,14 +50,6 @@ def train_test_split(
     return df.filter(b >= test_pct), df.filter(b < test_pct)
 
 
-def stratified_sample(
-    df: DataFrame, strata_col: str, fractions: dict, seed: int = 42
-) -> DataFrame:
-    """Per-stratum Bernoulli sampling (sampleBy) — for quota sampling
-    where exact reproducibility matters less than stratum balance."""
-    return df.sampleBy(strata_col, fractions, seed)
-
-
 def hash_frac(col: str, salt: str = "") -> Column:
     """Stable fraction in [0, 1) from md5 of the key (+salt) — the
     continuous version of hash_bucket, for per-stratum keep rates that

@@ -320,11 +320,11 @@ def q_lookup_join_precomputed(spark: SparkSession, sf_dir: str) -> DataFrame:
     query is scan → broadcast join → group — no regexp in the plan.
     The oracle recomputes every key from scratch, proving the
     write-time materialization changed nothing."""
-    from .sources.parquet import read_parquet_immutable
+    from .sources.parquet import read_parquet
 
     table, dim_path = _prepare_lookup_precomputed(spark, sf_dir)
     fact = spark.table(table)
-    dim = read_parquet_immutable(spark, dim_path)
+    dim = read_parquet(spark, dim_path)
     joined = fact.join(F.broadcast(dim), "k", "left")
     return joined.groupBy(F.col("p_brand").alias("marca")).agg(
         F.count(F.lit(1)).alias("itens"),

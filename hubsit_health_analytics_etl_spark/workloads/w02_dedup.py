@@ -436,10 +436,10 @@ def q_containment_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lazy: defined in w07 (imports after this module); call-time resolve
     from .w07_cluster_maintenance import _prepare_cluster_merge_index
 
-    from ..sources.parquet import read_parquet_immutable
+    from ..sources.parquet import read_parquet
 
     paths = _prepare_cluster_merge_index(spark, sf_dir)
-    shingles = read_parquet_immutable(spark, paths["shingles"])
+    shingles = read_parquet(spark, paths["shingles"])
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(hash_bucket("doc_id") < NEW_BATCH_PCT)
     return incremental_containment(batch, shingles, CONTAINMENT_THRESHOLD_U6)

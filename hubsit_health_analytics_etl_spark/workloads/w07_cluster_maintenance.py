@@ -372,13 +372,13 @@ def q_dedup_clusters_merge_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..operators.sampling import hash_bucket
 
-    from ..sources.parquet import read_parquet_immutable
+    from ..sources.parquet import read_parquet
 
     paths = _prepare_cluster_merge_index(spark, sf_dir)
-    index_labels = read_parquet_immutable(spark, paths["labels"])
-    bands = read_parquet_immutable(spark, paths["bands"])
-    shingles = read_parquet_immutable(spark, paths["shingles"])
-    fps = read_parquet_immutable(spark, paths["fps"])
+    index_labels = read_parquet(spark, paths["labels"])
+    bands = read_parquet(spark, paths["bands"])
+    shingles = read_parquet(spark, paths["shingles"])
+    fps = read_parquet(spark, paths["fps"])
 
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(hash_bucket("doc_id") < NEW_BATCH_PCT)

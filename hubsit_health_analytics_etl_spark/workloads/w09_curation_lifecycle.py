@@ -98,11 +98,11 @@ def q_dedup_clusters_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.clusters import forget_documents
     from ..operators.sampling import hash_bucket
 
-    from ..sources.parquet import read_parquet_immutable
+    from ..sources.parquet import read_parquet
 
     paths = _prepare_forget_index(spark, sf_dir)
-    labels = read_parquet_immutable(spark, paths["labels"])
-    edges = read_parquet_immutable(spark, paths["edges"])
+    labels = read_parquet(spark, paths["labels"])
+    edges = read_parquet(spark, paths["edges"])
     docs = load_table(spark, sf_dir, "documents")
     deleted = docs.filter(
         hash_bucket("doc_id", salt="forget") < FORGET_PCT

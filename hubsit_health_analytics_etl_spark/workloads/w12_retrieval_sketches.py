@@ -986,11 +986,11 @@ def q_bm25_search_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.textanalysis import bm25_scores
 
-    from ..sources.parquet import read_parquet_immutable
+    from ..sources.parquet import read_parquet
 
     base = _prepare_term_index(spark, sf_dir)
     term_stats = tuple(
-        read_parquet_immutable(spark, os.path.join(base, name))
+        read_parquet(spark, os.path.join(base, name))
         for name in ["tf", "dl", "dfreq", "stats"]
     )
     scores = bm25_scores(None, _bm25_qterms(spark), term_stats=term_stats)
@@ -1339,11 +1339,11 @@ def q_hybrid_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.textanalysis import bm25_scores
 
-    from ..sources.parquet import read_parquet_immutable
+    from ..sources.parquet import read_parquet
 
     term_base, emb_base = _prepare_hybrid_indexes(spark, sf_dir)
     tf, dl, dfreq, st = (
-        read_parquet_immutable(spark, os.path.join(term_base, name))
+        read_parquet(spark, os.path.join(term_base, name))
         for name in ["tf", "dl", "dfreq", "stats"]
     )
     term_stats = (tf, dl, dfreq, st)
@@ -1385,7 +1385,7 @@ def q_hybrid_rrf_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lexr = _hybrid_two_phase_topk(lex, "s_u6", "lex_rk")
 
-    emb = read_parquet_immutable(spark, os.path.join(emb_base, "norms"))
+    emb = read_parquet(spark, os.path.join(emb_base, "norms"))
     qv = emb.filter(F.col("vec_id").isin(HYBRID_QUERY_DOCS)).select(
         F.col("vec_id").alias("query_doc"),
         F.col("embedding").alias("qvec"),

@@ -76,11 +76,11 @@ def q_bm25_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import hash_bucket
     from ..operators.textanalysis import bm25_scores, term_stats_forget
 
-    from ..sources.parquet import read_parquet_immutable
+    from ..sources.parquet import read_parquet
 
     base = _prepare_term_index(spark, sf_dir)
     tf, dl, dfreq, raw = (
-        read_parquet_immutable(spark, os.path.join(base, name))
+        read_parquet(spark, os.path.join(base, name))
         for name in ["tf", "dl", "dfreq", "raw"]
     )
     docs = load_table(spark, sf_dir, "documents")
@@ -181,10 +181,10 @@ def q_scrub_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import hash_bucket
     from ..operators.textanalysis import scrub_from_postings
 
-    from ..sources.parquet import read_parquet_immutable
+    from ..sources.parquet import read_parquet
 
     base = _prepare_postings_index(spark, sf_dir)
-    postings = read_parquet_immutable(spark, os.path.join(base, "postings"))
+    postings = read_parquet(spark, os.path.join(base, "postings"))
     docs = load_table(spark, sf_dir, "documents")
     is_del = hash_bucket("doc_id", salt="forget") < FORGET_PCT
     deleted = docs.filter(is_del).select("doc_id")
@@ -237,10 +237,10 @@ def q_cms_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.sampling import hash_bucket
     from ..operators.sketches import cms_forget_grid
 
-    from ..sources.parquet import read_parquet_immutable
+    from ..sources.parquet import read_parquet
 
     base = _prepare_cms_grid(spark, sf_dir)
-    grid = read_parquet_immutable(spark, os.path.join(base, "grid"))
+    grid = read_parquet(spark, os.path.join(base, "grid"))
     events = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id"
     )

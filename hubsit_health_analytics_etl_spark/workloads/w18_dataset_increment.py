@@ -134,9 +134,9 @@ def _scrub_splice(spark, docs, paths, sel_old, sel_new, arts=None, delta=None):
     def rd(x):
         if isinstance(x, DataFrame):
             return x
-        from ..sources.parquet import read_parquet_immutable
+        from ..sources.parquet import read_parquet
 
-        return read_parquet_immutable(spark, x)
+        return read_parquet(spark, x)
 
     from ..operators.concurrency import ckpt_wave
 
@@ -652,10 +652,10 @@ def q_llm_dataset_new_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.textanalysis import bpe_word_table
 
     paths = _prepare_llm_standing(spark, sf_dir)
-    from ..sources.parquet import read_parquet_immutable
+    from ..sources.parquet import read_parquet
 
     def rd(p):
-        return read_parquet_immutable(spark, p)
+        return read_parquet(spark, p)
     docs = load_table(spark, sf_dir, "documents")
     from ..operators.sampling import hash_bucket
 
@@ -753,9 +753,9 @@ def _splice_selection(spark, docs, paths, batch, arts=None, delta=None):
     def rd(x):
         if isinstance(x, DataFrame):
             return x
-        from ..sources.parquet import read_parquet_immutable
+        from ..sources.parquet import read_parquet
 
-        return read_parquet_immutable(spark, x)
+        return read_parquet(spark, x)
 
     from ..operators.concurrency import ckpt_wave, run_concurrent
 
@@ -1157,10 +1157,10 @@ def q_llm_dataset_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     paths = _prepare_llm_standing_full(spark, sf_dir)
-    from ..sources.parquet import read_parquet_immutable
+    from ..sources.parquet import read_parquet
 
     def rd(p):
-        return read_parquet_immutable(spark, p)
+        return read_parquet(spark, p)
     docs = load_table(spark, sf_dir, "documents")
     is_del = hash_bucket("doc_id", salt="forget") < LLM_FORGET_PCT
     deleted = docs.filter(is_del)
@@ -1589,10 +1589,10 @@ def _prepare_llm_merge_fixture(spark: SparkSession, sf_dir: str) -> dict[str, st
     from ..sources.sinks import write_parquet
 
     paths = dict(_prepare_llm_standing(spark, sf_dir))
-    from ..sources.parquet import read_parquet_immutable
+    from ..sources.parquet import read_parquet
 
     def rd(p):
-        return read_parquet_immutable(spark, p)
+        return read_parquet(spark, p)
     base = _run_scoped_index_dir("llm_merge_fixture")
     merges = bpe_train_merges_from_words(rd(paths["rwf"]), BPE_MERGES)
     paths["merges_json"] = os.path.join(base, "merges.json")
@@ -1664,10 +1664,10 @@ def q_llm_dataset_merge_only(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.textanalysis import bpe_apply_merges
 
     paths = _prepare_llm_merge_fixture(spark, sf_dir)
-    from ..sources.parquet import read_parquet_immutable
+    from ..sources.parquet import read_parquet
 
     def rd(p):
-        return read_parquet_immutable(spark, p)
+        return read_parquet(spark, p)
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(hash_bucket("doc_id") < NEW_BATCH_PCT)
 
